@@ -10,8 +10,8 @@ import org.apache.spark.sql.DataFrame
   * showed session-tail step ratios of 10–15× for operators whose
   * isolated two-decade runs measure 5–7× — accumulated JVM/GC/broadcast
   * debt from the ~100-entry bench session ahead of the block, not
-  * super-linear work (r9/r10 "What's wrong" #1; ProfileScale100 was the
-  * manual evidence). Running BOTH decades (1× and `factor`×) in one
+  * super-linear work (r9/r10 "What's wrong" #1; fresh-JVM runs of the
+  * 100× step were the manual evidence). Running BOTH decades (1× and `factor`×) in one
   * fresh JVM makes the committed ratio an isolated measurement by
   * construction — same methodology, now structural.
   *

@@ -17,6 +17,19 @@ object Tables {
 
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
+  /** Memo key for a per-dataset probe (row count, dimensionality):
+    * the table's path and its latest modification time, read through
+    * the Hadoop `FileSystem` for the path — so `file:`, `hdfs:` and
+    * object-store dirs all key correctly, where `java.io.File` reads 0
+    * for any of them. A table directory counts its own time and its
+    * files', so a rewrite in the same JVM misses the memo.
+    */
+  def snapshot(spark: SparkSession, dir: String, name: String): (String, Long) = {
+    val p = new org.apache.hadoop.fs.Path(path(dir, name))
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (p.toString, (fs.getFileStatus(p) +: fs.listStatus(p)).map(_.getModificationTime).max)
+  }
+
   /** `events.ts` has shipped in three on-disk encodings across
     * testdata generations: parquet TIMESTAMP(NANOS) — which Spark's
     * TimestampType (micros) cannot hold, so the session reads it as a

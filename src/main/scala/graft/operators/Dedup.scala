@@ -5,7 +5,7 @@ import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{ColumnShim, HyperplaneCodes, MinHashSignature, ShingleHashes, SimHash64}
+import org.apache.spark.sql.graft.{ColumnShim, HyperplaneCodes, MinHashSignature, Rounds, ShingleHashes, SimHash64}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Corpus deduplication (SURVEY.md §2 D1–D5) — the first pass of any
@@ -101,23 +101,6 @@ object Dedup {
     */
   private def spread(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-  /** Distinct 3-gram shingle set per document, exploded to an inverted
-    * index (shingle → doc), optionally df-capped.
-    */
-  private def shingleIndex(docs: DataFrame, n: Int, maxDf: Option[Int]): DataFrame = {
-    val idx = spread(docs)
-      .select(col("doc_id"), explode(wordShingles(col("text"), n)).as("shingle"))
-    maxDf.fold(idx) { cap =>
-      // stop-shingle cap: drop shingles present in more than `cap` docs.
-      // The df count is a broadcast-sized aggregate (distinct shingles
-      // above a cap are few by Zipf) — candidate recall for pairs whose
-      // overlap is not dominated by stop-shingles is unaffected.
-      val hot = idx.groupBy("shingle").agg(count(lit(1)).as("df"))
-        .filter(col("df") > cap).select("shingle")
-      idx.join(broadcast(hot), Seq("shingle"), "left_anti")
-    }
-  }
 
   /** D2: exact n-gram Jaccard near-dup with PREFIX FILTERING (the
     * PPJoin family — Xiao et al., "Efficient Similarity Joins for Near
@@ -354,7 +337,7 @@ object Dedup {
     (sets, idx)
   }
 
-  /** Documents-table row count, memoized per (dir, mtime) like
+  /** Documents-table row count, memoized per [[Tables.snapshot]] like
     * [[graft.operators.Similarity]]'s embeddingRows — a dataset
     * property consulted for broadcast-vs-shuffle sizing decisions, not
     * a result cache (results never depend on it).
@@ -362,8 +345,7 @@ object Dedup {
   private val docsRowsCache =
     scala.collection.concurrent.TrieMap.empty[(String, Long), Long]
   private def documentsRows(spark: SparkSession, dir: String): Long =
-    docsRowsCache.getOrElseUpdate(
-      (dir, new java.io.File(Tables.path(dir, "documents")).lastModified()),
+    docsRowsCache.getOrElseUpdate(Tables.snapshot(spark, dir, "documents"),
       Tables.load(spark, dir, "documents").count())
 
   /** MinHash signature: native codegen'd expression
@@ -416,15 +398,12 @@ object Dedup {
       .localCheckpoint()
     // free the PREVIOUS invocation's candidate frame (advice r14): the
     // eager checkpoint above otherwise accumulates one pair-sized block
-    // set per invocation in a long-lived JVM — the same pathology
-    // CheckpointIds.free exists for. Invocations construct-then-consume
-    // sequentially (Verify/Bench both materialize each query before
-    // building the next), so the superseded frame has no live reader.
-    val prevCand = lastMinhashCand.put(spark.sparkContext.applicationId,
-      org.apache.spark.sql.graft.CheckpointIds.of(cand))
-    if (prevCand != null)
-      org.apache.spark.sql.graft.CheckpointIds.freeIds(
-        spark.sparkContext, prevCand)
+    // set per invocation in a long-lived JVM — the pathology `Rounds`
+    // exists for. Invocations construct-then-consume sequentially
+    // (Verify/Bench both materialize each query before building the
+    // next), so the superseded frame has no live reader.
+    val prevCand = lastMinhashCand.put(spark.sparkContext.applicationId, Rounds.of(cand))
+    if (prevCand != null) Rounds.freeIds(spark.sparkContext, prevCand)
     // exact verify on candidates only: semi-join first so the string
     // shingle sets are computed for candidate docs alone, not the corpus
     val candIds = cand.select(col("doc_a").as("doc_id"))
@@ -1004,58 +983,51 @@ object Dedup {
     * O(log n) bound.
     */
   private[graft] def clusterLabelsWithRounds(pairs: DataFrame): (DataFrame, Int) = {
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .localCheckpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("lbl", col("id"))
-      .localCheckpoint()
-    def propagate(ls: DataFrame): DataFrame = {
-      val nbrMin = edges
-        .join(ls.select(col("id").as("dst"), col("lbl").as("dst_lbl")), Seq("dst"))
-        .groupBy(col("src").as("id"))
-        .agg(min("dst_lbl").as("nbr_min"))
-      ls.select("id", "lbl").join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("lbl"), coalesce(col("nbr_min"), col("lbl"))).as("lbl"),
-          (coalesce(col("nbr_min"), col("lbl")) < col("lbl")).as("chg"))
-    }
-    // Pointer jumping (path doubling): label ← label-of-label. Every
-    // label is itself a node id (the invariant: lbl(v) is the min id
-    // seen so far in v's component), so one labels⋈labels hop halves
-    // the depth of every pointer chain. Alternating propagate (moves
-    // information one EDGE) with shortcut (halves POINTER chains)
-    // converges in O(log diameter) rounds instead of O(diameter) —
-    // the difference between 6 and 64 shuffles on a 64-deep chain.
-    // Kiveris et al.'s star-contraction achieves the same bound; the
-    // shortcut formulation reuses the existing labels relation with
-    // one extra equi-join per round and no graph rewriting.
-    def shortcut(ls: DataFrame): DataFrame = {
-      val hop = ls.select(col("id").as("lbl"), col("lbl").as("lbl2"))
-      ls.join(hop, Seq("lbl"), "left")
-        .select(col("id"),
-          coalesce(col("lbl2"), col("lbl")).as("lbl"),
-          (col("chg") || coalesce(col("lbl2"), col("lbl")) < col("lbl")).as("chg"))
-    }
-    // Each step is checkpointed (an unmaterialized inner step would
-    // re-execute its join+aggregate for both of the next step's
-    // references to it); chg is carried through the checkpoint so the
-    // convergence count scans materialized rows, never a
-    // labels-vs-labels join. Both steps only ever LOWER labels, so a
-    // round with neither step changing anything is a fixpoint of
-    // neighbor-min — labels are componentwise-constant minima.
-    // No superseded-round freeing here (r14): unlike the k-truss /
-    // k-core edge frames, the label frames are pair-graph-node-sized
-    // (hundreds to low thousands of rows), so the per-round unpersist
-    // calls cost more than the blocks they reclaim.
-    var changed = 1L
     var rounds = 0
-    while (changed > 0) {
-      val mid = propagate(labels).localCheckpoint()
-      val next = shortcut(mid).localCheckpoint()
-      changed = next.filter(col("chg")).count()
-      labels = next.select("id", "lbl")
-      rounds += 1
+    val labels = Rounds(pairs.sparkSession) { rs =>
+      val edges = rs.checkpoint(pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+        .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
+      val init = rs.checkpoint(edges.select(col("src").as("id")).distinct()
+        .withColumn("lbl", col("id")))
+      def propagate(ls: DataFrame): DataFrame = {
+        val nbrMin = edges
+          .join(ls.select(col("id").as("dst"), col("lbl").as("dst_lbl")), Seq("dst"))
+          .groupBy(col("src").as("id"))
+          .agg(min("dst_lbl").as("nbr_min"))
+        ls.select("id", "lbl").join(nbrMin, Seq("id"), "left")
+          .select(col("id"),
+            least(col("lbl"), coalesce(col("nbr_min"), col("lbl"))).as("lbl"),
+            (coalesce(col("nbr_min"), col("lbl")) < col("lbl")).as("chg"))
+      }
+      // Pointer jumping (path doubling): label ← label-of-label. Every
+      // label is itself a node id (the invariant: lbl(v) is the min id
+      // seen so far in v's component), so one labels⋈labels hop halves
+      // the depth of every pointer chain. Alternating propagate (moves
+      // information one EDGE) with shortcut (halves POINTER chains)
+      // converges in O(log diameter) rounds instead of O(diameter) —
+      // the difference between 6 and 64 shuffles on a 64-deep chain.
+      // Kiveris et al.'s star-contraction achieves the same bound; the
+      // shortcut formulation reuses the existing labels relation with
+      // one extra equi-join per round and no graph rewriting.
+      def shortcut(ls: DataFrame): DataFrame = {
+        val hop = ls.select(col("id").as("lbl"), col("lbl").as("lbl2"))
+        ls.join(hop, Seq("lbl"), "left")
+          .select(col("id"),
+            coalesce(col("lbl2"), col("lbl")).as("lbl"),
+            (col("chg") || coalesce(col("lbl2"), col("lbl")) < col("lbl")).as("chg"))
+      }
+      // Each step is checkpointed (an unmaterialized inner step would
+      // re-execute its join+aggregate for both of the next step's
+      // references to it); chg is carried through the checkpoint so the
+      // convergence count scans materialized rows, never a
+      // labels-vs-labels join. Both steps only ever LOWER labels, so a
+      // round with neither step changing anything is a fixpoint of
+      // neighbor-min — labels are componentwise-constant minima.
+      val (last, n) = rs.until(init, Int.MaxValue) { ls =>
+        shortcut(rs.checkpoint(propagate(ls)))
+      }(_.filter(col("chg")).count() == 0)
+      rounds = n
+      last.select("id", "lbl")
     }
     (labels, rounds)
   }

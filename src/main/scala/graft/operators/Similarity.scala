@@ -4,7 +4,7 @@ import graft.Tables
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{ColumnShim, HyperplaneCodes}
+import org.apache.spark.sql.graft.{ColumnShim, HyperplaneCodes, Rounds}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2 A1–A3).
@@ -41,32 +41,25 @@ object Similarity {
     * over a limit-1 scan) — never assumed. A dim mismatch between the
     * hyperplanes and the vectors would silently truncate the
     * dot products and degrade recall with no error. Memoized per
-    * table dir: the dim is a property of the dataset, and the probe
-    * job is pure fixed overhead on every re-run otherwise.
+    * [[Tables.snapshot]]: the dim is a property of the dataset, and the
+    * probe job is pure fixed overhead on every re-run otherwise.
     */
-  /** Memo key for per-dataset probes: (dir, snapshot). The snapshot is
-    * the table path's last-modified time — if the dataset at `dir` is
-    * rewritten in the same JVM, the mtime changes and the memo misses,
-    * so [[knnJoin]] can never size its broadcast blocks from a stale
-    * count (a silent ≫32 MB block with no error otherwise).
-    */
-  private def snapshotKey(dir: String): (String, Long) =
-    (dir, new java.io.File(Tables.path(dir, "embeddings")).lastModified())
-
   private val dimCache = new scala.collection.concurrent.TrieMap[(String, Long), Int]
   private[operators] def embeddingDim(spark: SparkSession, dir: String): Int =
-    dimCache.getOrElseUpdate(snapshotKey(dir),
+    dimCache.getOrElseUpdate(Tables.snapshot(spark, dir, "embeddings"),
       Tables.load(spark, dir, "embeddings")
         .select(size(col("embedding")).as("d")).limit(1).head.getInt(0))
 
-  /** Corpus row count, memoized per table dir like [[embeddingDim]] —
-    * [[knnJoin]] needs it to size its broadcast blocks, and paying a
-    * count job per plan CONSTRUCTION (Round4Spec builds the plan three
-    * times) is pure fixed overhead on a static dataset.
+  /** Corpus row count, memoized per table snapshot like
+    * [[embeddingDim]] — [[knnJoin]] needs it to size its broadcast
+    * blocks, and paying a count job per plan CONSTRUCTION (Round4Spec
+    * builds the plan three times) is pure fixed overhead on a static
+    * dataset. A rewritten table misses the memo, so the blocks are
+    * never sized from a stale count (a silent ≫32 MB block otherwise).
     */
   private val rowsCache = new scala.collection.concurrent.TrieMap[(String, Long), Long]
-  private[operators] def embeddingRows(spark: SparkSession, dir: String): Long =
-    rowsCache.getOrElseUpdate(snapshotKey(dir),
+  private[graft] def embeddingRows(spark: SparkSession, dir: String): Long =
+    rowsCache.getOrElseUpdate(Tables.snapshot(spark, dir, "embeddings"),
       Tables.load(spark, dir, "embeddings").count())
 
   /** The benchmark query set: lowest `nQueries` vec_ids. */
@@ -602,11 +595,10 @@ object Similarity {
     // depth; the first r15 shape shared the scan but still re-ran the
     // probe-explode join + distinct per depth (measured: 4 loop
     // rounds × ~1.3 s at sf0.1 — the operator's dominant slice).
-    val pool = lshPoolBuckets(spark, dir, nTables, seed).localCheckpoint()
-    val profile = pairDepthProfile(pool, bits, probe).localCheckpoint()
-    // the profile materialized (eager checkpoint) — the pool backs
-    // nothing downstream and is dead
-    org.apache.spark.sql.graft.CheckpointIds.free(pool)
+    val profile = Rounds(spark) { rs =>
+      rs.checkpoint(pairDepthProfile(
+        rs.checkpoint(lshPoolBuckets(spark, dir, nTables, seed)), bits, probe))
+    }
     // DISTINCT pairs — the quantity the verify stage actually pays
     // for and the spec reports; the profile aggregate is per directed
     // pair, so a filtered count IS the depth's distinct-pair count
@@ -1048,7 +1040,7 @@ object Similarity {
     * is the coverage radius AFTER r−1 centers, i.e. the distance that
     * made this center the farthest point; it is non-increasing.
     */
-  def embCoreset(spark: SparkSession, dir: String, k: Int = 8): DataFrame = {
+  def embCoreset(spark: SparkSession, dir: String, k: Int = 8): DataFrame = Rounds(spark) { rs =>
     import spark.implicits._
     val e = corpus(spark, dir).select(col("vec_id"), col("embedding"))
     def distTo(center: Seq[Float]): Column =
@@ -1058,9 +1050,8 @@ object Similarity {
     val seedRow = e.orderBy("vec_id").limit(1)
       .select(col("vec_id"), col("embedding")).head
     var chosen = List((1, seedRow.getLong(0), 0L))
-    var center = seedRow.getAs[scala.collection.Seq[Float]]("embedding").toSeq
-    var state = e.withColumn("min_dist", distTo(center)).localCheckpoint()
-    for (r <- 2 to k) {
+    val seed = seedRow.getAs[scala.collection.Seq[Float]]("embedding").toSeq
+    rs.loop(rs.checkpoint(e.withColumn("min_dist", distTo(seed))), k - 1) { state =>
       // the embedding rides the argmax struct (third field — never
       // reached by the (min_dist, -vec_id) total order), so the
       // center lookup needs no second job per round
@@ -1068,12 +1059,9 @@ object Similarity {
         .agg(max(struct(col("min_dist"), (-col("vec_id")).as("nid"),
           col("embedding").as("emb"))).as("m"))
         .select(col("m.min_dist"), (-col("m.nid")).as("vec_id"), col("m.emb")).head
-      val (radius, cid) = (far.getLong(0), far.getLong(1))
-      chosen ::= ((r, cid, radius))
-      center = far.getAs[scala.collection.Seq[Float]](2).toSeq
-      state = state
-        .withColumn("min_dist", least(col("min_dist"), distTo(center)))
-        .localCheckpoint()
+      chosen ::= ((chosen.size + 1, far.getLong(1), far.getLong(0)))
+      val center = far.getAs[scala.collection.Seq[Float]](2).toSeq
+      state.withColumn("min_dist", least(col("min_dist"), distTo(center)))
     }
     chosen.reverse.toDF("rank", "center_id", "radius_micro").orderBy("rank")
   }

@@ -58,8 +58,8 @@ object StreamBench {
   private val filesPerTrigger = 2
 
   /** The interval join runs with LARGER micro-batches (4 files → 4
-    * batches instead of 8). Profiled r9 (ProfileJoinInterval, sf0.1,
-    * 200k events): its wall time is a per-batch FLOOR of ~0.9-1.0 s
+    * batches instead of 8). Profiled r9 (sf0.1, 200k events, one
+    * stream-stream join per run): its wall time is a per-batch FLOOR of ~0.9-1.0 s
     * that barely moves with shuffle partitions (sp=4/8/16 → 7.4/8.0/
     * 11.6 s) or provider (RocksDB + single-store join stateFormat v3
     * → 6.9 s), because a stream-stream join commits FOUR state stores

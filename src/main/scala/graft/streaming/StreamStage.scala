@@ -92,7 +92,7 @@ object StreamStage {
     val bucketed = df
       .withColumn("_b", ntile(nFiles).over(Window.orderBy(col(tsCol))))
       .localCheckpoint()
-    val mine = org.apache.spark.sql.graft.CheckpointIds.of(bucketed)
+    val mine = org.apache.spark.sql.graft.Rounds.of(bucketed)
     try
       stageOrderedBatches(out,
         (1 to nFiles).map(b => bucketed.filter(col("_b") === b).drop("_b")))
